@@ -104,7 +104,7 @@ object Main {
     sb.append(f"Dup-pair recall: ${rep.dupPairRecall}%.6f (north-star target >= 0.99)%n")
     sb.append(f"Dup-pair precision: ${rep.dupPairPrecision}%.6f%n")
     res.stats.foreach(s => sb.append(
-      f"phase=${s.phase} round=${s.macroRound} verified=${s.verifiedPairs} clusters=${s.clusters} singles=${s.singles} workRate=${s.workRate}%.4f%n"))
+      f"phase=${s.phase} round=${s.macroRound} verified=${s.verifiedPairs} clusters=${s.clusters} singles=${s.singles} workRate=${s.workRate}%.4f seconds=${s.seconds}%.2f%n"))
     sb.toString
   }
 }

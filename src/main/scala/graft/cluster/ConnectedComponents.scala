@@ -65,14 +65,16 @@ object ConnectedComponents {
     * wall time on fixture-scale graphs by 10×+ (guide §1.2: fix the
     * distributed algorithm first — here the fix is to not distribute a
     * 3 MB problem). Override per session with
-    * `spark.graft.cc.driverUnionFindMaxEdges` (0 disables the fast path);
+    * `spark.graft.cc.driverUnionFindMaxEdges` (0 disables the fast path;
+    * larger overrides clamp to `Int.MaxValue - 1`, the probe's row limit);
     * beyond the cap the distributed loop runs exactly as before, so 100 TB
-    * behavior is unchanged. */
+    * behavior is unchanged. For `inputNormalized` callers the cap counts
+    * raw input rows, not distinct edges: their input is probed as given. */
   val DefaultDriverUnionFindMaxEdges: Long = 200000L
 
   private def driverCap(spark: SparkSession): Long =
-    try spark.conf.get("spark.graft.cc.driverUnionFindMaxEdges",
-      DefaultDriverUnionFindMaxEdges.toString).toLong
+    try math.min(spark.conf.get("spark.graft.cc.driverUnionFindMaxEdges",
+      DefaultDriverUnionFindMaxEdges.toString).toLong, Int.MaxValue - 1L)
     catch { case _: NumberFormatException => DefaultDriverUnionFindMaxEdges }
 
   /** Reference parent-array union-find with path compression + min-center
@@ -165,7 +167,7 @@ object ConnectedComponents {
     var curOwned = !inputNormalized
 
     val cap = driverCap(spark)
-    if (cap > 0 && cap <= Int.MaxValue - 1) {
+    if (cap > 0) {
       import spark.implicits._
       val probe = cur.as[(Long, Long)].limit(cap.toInt + 1).collect()
       if (probe.length <= cap) {

@@ -129,15 +129,22 @@ object Pipeline {
         math.max(1, Seq(stopWindow, volCap, maxMacro - macroItr + 1).min)
       }
 
+    /** Stop after `last` (a finished or resumed pass) with `bad` bad rounds:
+      * no singles left, or the explicit-mode work rate or the adaptive
+      * patience ran out. False at round 0 while singles remain. */
+    def stop(bad: Int, last: PhaseStat): Boolean =
+      last.singles == 0 || (
+        if (cfg.maxMacroRounds > 0) last.workRate < cfg.minWorkRate
+        else bad >= allowedBadMacro && last.macroRound >= minMacro)
+
     /** Fold one finished pass (rounds `rounds`) into the control state.
       * Returns (new bad-round count, stop?). */
-    def stepPass(bad: Int, rounds: Seq[Int], prevSingles: Long, stat: PhaseStat): (Int, Boolean) =
-      if (cfg.maxMacroRounds > 0) (0, stat.workRate < cfg.minWorkRate)
-      else {
-        val diff = prevSingles - stat.singles
-        val nbad = if (diff <= rounds.size * workInBadMacro) bad + rounds.size else 0
-        (nbad, nbad >= allowedBadMacro && rounds.last >= minMacro)
-      }
+    def stepPass(bad: Int, rounds: Seq[Int], prevSingles: Long, stat: PhaseStat): (Int, Boolean) = {
+      val resolved = prevSingles - stat.singles
+      val nbad =
+        if (cfg.maxMacroRounds > 0 || resolved > rounds.size * workInBadMacro) 0 else bad + rounds.size
+      (nbad, stop(nbad, stat))
+    }
   }
 
   /** Exact-duplicate collapse (round-2 scale fix). Web-scale corpora are
@@ -210,7 +217,7 @@ object Pipeline {
     * barrier-separated stages; at that size the wall is per-stage ADAPTIVE
     * REPLANNING + task-launch latency, not work (the ~91 s core-count-
     * invariant residual pass, VERDICT r3 #2). Passes whose focus estimate
-    * is below `cfg.smallPassFocusRows` therefore run with AQE off and a
+    * is at most [[SmallPassFocusRows]] therefore run with AQE off and a
     * small static shuffle-partition count; both are runtime confs restored
     * afterwards, so large passes keep AQE's skew/coalesce machinery.
     *
@@ -221,6 +228,8 @@ object Pipeline {
     * shuffle partitions, and nested or parallel use races the
     * save-and-restore. Callers that share a session across threads should
     * run small passes on `spark.newSession()` instead. */
+  private val SmallPassFocusRows = 100000L
+
   private[graft] def withSmallPassConf[A](spark: SparkSession, small: Boolean)(f: => A): A =
     if (!small) f
     else {
@@ -249,12 +258,16 @@ object Pipeline {
     * cryptic blockmgr ENOENT mid-CC (three CcScratchBench crashes at
     * default heap, round 7). Returns the warning it printed, if any, so a
     * spec can pin the guard. Heap ∝ data remains the protocol; this turns
-    * a violation into a diagnosed warning instead of a mystery crash. */
+    * a violation into a diagnosed warning instead of a mystery crash.
+    * Local mode only: there the driver heap IS the executor pool. A
+    * malformed `spark.memory.fraction` reads as Spark's 0.6 default. */
   private[graft] def heapPressureWarning(spark: SparkSession, n: Long): Option[String] = {
-    val frac = spark.conf.get("spark.memory.fraction", "0.6").toDouble
+    val frac =
+      try spark.conf.get("spark.memory.fraction", "0.6").toDouble
+      catch { case _: NumberFormatException => 0.6 }
     val pool = (Runtime.getRuntime.maxMemory() * frac).toLong
     val est = n * HotCacheBytesPerRow
-    if (est > pool) {
+    if (spark.sparkContext.isLocal && est > pool) {
       val msg = f"[graft] HEAP PRESSURE: estimated hot-cache footprint " +
         f"${est / 1e9}%.1f GB (n=$n × $HotCacheBytesPerRow B/row, measured) exceeds the " +
         f"managed pool ${pool / 1e9}%.1f GB (heap × spark.memory.fraction=$frac). " +
@@ -270,7 +283,7 @@ object Pipeline {
   /** Phases 2+3: chunk rounds + global banding + first CC pass. */
   def initialState(spark: SparkSession, features: DataFrame, captions: DataFrame,
                    cfg: GraftConfig, n: Long, capLen: Int,
-                   retire: () => Unit = () => ()): (State, PhaseStat) = {
+                   retire: () => Unit): (State, PhaseStat) = {
     val rows = features.select("row_id")
 
     val (identityEdges, repIds, nDup) = collapseExactDups(features, captions, cfg.saltShards)
@@ -381,7 +394,7 @@ object Pipeline {
   def macroStep(spark: SparkSession, features: DataFrame, captions: DataFrame, st: State,
                 cfg: GraftConfig, rounds: Seq[Int],
                 prevClusters: Long, prevSingles: Long,
-                retire: () => Unit = () => ()): (State, PhaseStat) = {
+                retire: () => Unit): (State, PhaseStat) = {
     // Focus = all singles + score-ranked reps of every multi cluster, the
     // reference's cycling r (`:623-628`): round j samples rank (j-1) %
     // reps_per_cluster. ONE wide exchange: state joins the checkpointed
@@ -480,22 +493,10 @@ object Pipeline {
       val remapIsSmall = probe.length <= labelEdgeCap
       val remap: DataFrame =
         if (remapIsSmall) {
-          val edges = probe.map(r => (r.getLong(0), r.getLong(1)))
-          val parent = scala.collection.mutable.Map.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r0 = x
-            while (parent.getOrElse(r0, r0) != r0) r0 = parent(r0)
-            var c = x
-            while (parent.getOrElse(c, c) != r0) { val nx = parent(c); parent(c) = r0; c = nx }
-            r0
-          }
-          edges.foreach { case (x, y) =>
-            val (px, py) = (find(x), find(y))
-            if (px != py) parent(math.max(px, py)) = math.min(px, py) // min-center (:413)
-          }
-          val pairs = parent.keys.map(k => (k, find(k))).filter(p => p._1 != p._2).toSeq
           import spark.implicits._
-          pairs.toDF("cluster_id", "new_cluster_id")
+          ConnectedComponents.driverUnionFind(probe.map(r => (r.getLong(0), r.getLong(1))))
+            .filter(p => p._1 != p._2).toSeq
+            .toDF("cluster_id", "new_cluster_id")
         } else {
           ConnectedComponents.components(spark, labelEdges, retire = retire)
             .where(col("row_id") =!= col("cluster_id"))
@@ -546,9 +547,31 @@ object Pipeline {
     // 1. Featurize -- bytes column pruned from the scan (SURVEY.md par.4).
     // The shingle array is consumed inside featurize (minhash/simhash);
     // verification recomputes caption grams at the verify site, so the
-    // cached relation carries ~10x less per row without it.
-    // The cache is HASH-PARTITIONED ON row_id: every pass joins this
-    // relation 4-6 times on row_id (verify sides, focus filter), and the
+    // cached relation carries ~10x less per row without it. Captions come
+    // from a second scan of the SOURCE (caption is a source column; row_id
+    // is a hash of image_id), not a second featurize pass — no double
+    // shingle/signature compute.
+    val features = MinHash.featurize(spark, images, cfg).toDF()
+      .drop("shingles", "caption", "simhash")
+    val captions = images.select(
+      graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"), col("caption"))
+    cluster(spark, features, captions, cfg)
+  }
+
+  /** A resumed run's start: loaded state, last completed pass, bad rounds. */
+  private[cluster] final case class Start(state: State, last: PhaseStat, bad: Int)
+
+  /** The clustering driver over un-cached `features` (row_id, minhash,
+    * phash) and `captions` (row_id, caption): caches both, then runs round
+    * 0 — or resumes from `resume()`, called once the caches are built — and
+    * the fused macro passes, calling `onPass(state, stat, bad)` after each
+    * before retiring its shuffles. Stats cover the computed passes only. */
+  private[cluster] def cluster(spark: SparkSession, features0: DataFrame,
+      captions0: DataFrame, cfg: GraftConfig,
+      resume: () => Option[Start] = () => None,
+      onPass: (State, PhaseStat, Int) => Unit = (_, _, _) => ()): Result = {
+    // The caches are HASH-PARTITIONED ON row_id: every pass joins these
+    // relations 4-6 times on row_id (verify sides, focus filter), and the
     // cached partitioning propagates through the projections, so those
     // joins shuffle only the (much smaller) pair side — profiled at 8M
     // rows, the per-round full-corpus re-shuffles dominated macro-round
@@ -560,40 +583,35 @@ object Pipeline {
     // column (92 B/row, read only by round-0 exact-dup/chunk hashing and
     // the hamming-SURVIVOR side of each verify) lives in its own DISK_ONLY
     // cache: columnar-compressed on scratch disk, OS-page-cache-hot, zero
-    // JVM-heap charge. Captions come from a second scan of the SOURCE
-    // (caption is a source column; row_id is a hash of image_id), not a
-    // second featurize pass — no double shingle/signature compute.
-    // DETERMINISM REQUIREMENT (ADVICE r5): because of that second scan, the
-    // `images` plan must yield the same row set on every execution — a bare
-    // limit()/sample() without a checkpoint can hand the two caches
-    // different rows, and the inner verify joins would then drop rows with
-    // no error. Both materialization jobs below fold in a bit_xor(row_id)
-    // signature and the run fails loudly on mismatch.
-    val features = MinHash.featurize(spark, images, cfg).toDF()
-      .drop("shingles", "caption", "simhash")
-      .repartition(col("row_id"))
+    // JVM-heap charge.
+    // DETERMINISM REQUIREMENT (ADVICE r5): the two caches come from two
+    // scans of the input, so its plan must yield the same row set on every
+    // execution — a bare limit()/sample() without a checkpoint can hand the
+    // two caches different rows, and the inner verify joins would then drop
+    // rows with no error. Both materialization jobs below fold in a
+    // bit_xor(row_id) signature and the run fails loudly on mismatch.
+    val features = features0.repartition(col("row_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one job: materialize the hot cache AND collect n + the id signature
     val fRow = features.agg(
       count(lit(1)), coalesce(expr("bit_xor(row_id)"), lit(0L))).head()
     val n = fRow.getLong(0)
     val idSig = fRow.getLong(1)
-    val captions = images.select(
-        graft.feat.RowIds.rowIdCol(col("image_id")).as("row_id"), col("caption"))
-      .repartition(col("row_id")) // align with the hot cache: verify joins both
+    val captions = captions0.repartition(col("row_id"))
       .persist(StorageLevel.DISK_ONLY)
     // one job: materialize the captions cache AND collect typical length +
     // the id signature + row count for the determinism guard. The count is
     // part of the check (ADVICE r6): row-set differences with even
     // multiplicity XOR-cancel in bit_xor, so the signature alone can pass
-    // while the two caches disagree on cardinality.
+    // while the two caches disagree on cardinality. capLen is an aggregate,
+    // not a first row, so resumed and fresh runs agree (VERDICT r1 #1).
     val capRow = captions.agg(
       coalesce(expr("bit_xor(row_id)"), lit(0L)),
       coalesce(max(length(col("caption"))), lit(0)),
       count(lit(1))).head()
     if (capRow.getLong(0) != idSig || capRow.getLong(2) != n)
       throw new IllegalStateException(
-        "Pipeline.run: the images plan yielded different row sets across its " +
+        "Pipeline: the input plan yielded different row sets across its " +
         "two scans (non-deterministic input, e.g. limit()/sample() without a " +
         "checkpoint) — the hot features cache and the captions cache would " +
         "disagree and verify joins would silently drop rows. Materialize the " +
@@ -606,17 +624,13 @@ object Pipeline {
     // recompute of an evicted cache block could still need); everything
     // created after this point is per-pass and provably dead at each pass
     // boundary.
-    val keepShuffles: Set[Int] =
-      if (cfg.retireShuffles)
-        org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
-      else Set.empty
-    def retire(): Unit = if (cfg.retireShuffles) {
+    val keepShuffles = org.apache.spark.graft.ShuffleRetirement.liveIds(spark.sparkContext)
+    def retire(): Unit = {
       org.apache.spark.graft.ShuffleRetirement
         .retireAllExcept(spark.sparkContext, keepShuffles); ()
     }
 
     val stats = scala.collection.mutable.ArrayBuffer.empty[PhaseStat]
-    val tInit = System.nanoTime()
     // Round-8 NEGATIVE result, kept on record (guide §1.2 — measure, don't
     // assume): wrapping round 0 in the small-pass conf at fixture scale
     // (AQE off + 16 static shuffle partitions) made round 0 itself faster
@@ -627,41 +641,37 @@ object Pipeline {
     // on a few-thousand-row relation. Round 0 therefore stays on the
     // session conf; only the late macro passes flip (below), as measured
     // in round 3.
-    var (st, stat0) = initialState(spark, features, captions, cfg, n, capLen, retire)
-    stats += stat0.copy(seconds = (System.nanoTime() - tInit) / 1e9)
-    retire()
+    var Start(st, last, bad) = resume().getOrElse {
+      val t0 = System.nanoTime()
+      val (s0, stat0) = initialState(spark, features, captions, cfg, n, capLen, retire)
+      val stat = stat0.copy(seconds = (System.nanoTime() - t0) / 1e9)
+      stats += stat
+      onPass(s0, stat, 0)
+      retire()
+      Start(s0, stat, 0)
+    }
 
     // 4. Final clustering: fused macro-round passes over the focus set
     // (C5/C6) — budget, bad-round patience and pass width scale with n
     // (RoundControl).
     val ctl = RoundControl(cfg, n)
-    var macroItr = 1
-    var bad = 0
-    var done = false
-    var prevSingles = stats.last.singles
-    var prevClusters = stats.last.clusters
+    var done = ctl.stop(bad, last)
+    var macroItr = last.macroRound + 1
     while (!done && macroItr <= ctl.maxMacro) {
-      if (prevSingles == 0) { done = true }
-      else {
-        val t = ctl.passSize(macroItr, bad, prevClusters)
-        val rounds = macroItr until (macroItr + t)
-        val tR = System.nanoTime()
-        val (st2, stat0) = withSmallPassConf(spark,
-          prevClusters <= cfg.smallPassFocusRows) {
-          macroStep(spark, features, captions, st, cfg, rounds, prevClusters,
-            prevSingles, retire)
-        }
-        st = st2
-        val stat = stat0.copy(seconds = (System.nanoTime() - tR) / 1e9)
-        stats += stat
-        retire()
-        val (nbad, stop) = ctl.stepPass(bad, rounds, prevSingles, stat)
-        bad = nbad
-        done = stop
-        prevSingles = stat.singles
-        prevClusters = stat.clusters
-        macroItr += t
+      val t = ctl.passSize(macroItr, bad, last.clusters)
+      val rounds = macroItr until (macroItr + t)
+      val t0 = System.nanoTime()
+      val (st2, stat0) = withSmallPassConf(spark, last.clusters <= SmallPassFocusRows) {
+        macroStep(spark, features, captions, st, cfg, rounds, last.clusters,
+          last.singles, retire)
       }
+      val stat = stat0.copy(seconds = (System.nanoTime() - t0) / 1e9)
+      stats += stat
+      val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)
+      st = st2; last = stat; bad = nbad; done = stop
+      onPass(st, stat, bad)
+      retire()
+      macroItr += t
     }
 
     Result(

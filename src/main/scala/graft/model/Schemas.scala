@@ -112,15 +112,5 @@ final case class GraftConfig(
                                    // Tune to the executor-disk budget; >1
                                    // only pays at the 10M+-row scales where
                                    // one query's intermediates outgrow disk
-    retireShuffles: Boolean = true, // retire provably-dead shuffle files at
-                                   // pass boundaries (GC-driven reclamation
-                                   // measured to never fire mid-run; peak
-                                   // scratch = CUMULATIVE shuffle bytes
-                                   // without this — see ShuffleRetirement)
-    smallPassFocusRows: Long = 100000, // focus sets below this run with AQE off
-                                   // and few shuffle partitions: per-stage
-                                   // adaptive replanning dominates tiny-pass
-                                   // wall (the ~91 s core-count-invariant
-                                   // residual pass, VERDICT r3 #2)
     seed: Long = 42L
 )

@@ -34,8 +34,10 @@ import org.apache.spark.{MapOutputTrackerMaster, SparkContext}
   * therefore retires only when every still-live relation is either (a)
   * eagerly localCheckpoint'ed — lineage truncated, so no plan path through
   * a retired shuffle exists — or (b) backed solely by keep-set shuffles
-  * (the features cache). This holds at pass boundaries AND at the two
-  * mid-pass sites (the round-0 batch loop and macroStep's early retire):
+  * (the features and captions caches). The engine retires only from
+  * `Pipeline`'s one clustering driver (behind `Pipeline.run` and
+  * `CheckpointedPipeline.run`): at pass boundaries, after the `onPass`
+  * hook, AND at the two mid-pass sites (round-0 batches, macroStep):
   * `verified`, `identityEdges` and `repIds` are checkpoints, not persisted
   * caches, precisely so those sites satisfy the contract (ADVICE r4).
   *

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.cluster.CheckpointedPipeline
+import graft.cluster.{CheckpointedPipeline, Pipeline}
 import graft.gen.SyntheticCorpus
 import graft.io.TableIO
 import graft.model.GraftConfig
@@ -163,6 +163,46 @@ class ResumeSpec extends SparkSpec {
       cfg.copy(q = 5))
     assert(rep4.featuresComputed.toSet == Set(0, 1, 2, 3),
       s"computed ${rep4.featuresComputed} of $done")
+  }
+
+  test("Pipeline.run and CheckpointedPipeline.run agree pass for pass, also on resume") {
+    // both entry points run one clustering driver, so on the same table
+    // they must give the same partition, scores and per-pass stats (wall
+    // seconds aside) in adaptive AND explicit (maxMacroRounds) mode; the
+    // explicit-mode resume after round 0 pins the shared stop rule on its
+    // minWorkRate branch
+    val base = Files.createTempDirectory("graft_drivers").toString
+    val imagesPath = s"$base/images"
+    val gen = SyntheticCorpus.generate(spark, SyntheticCorpus.GenConfig(groups = 60)).cache()
+    TableIO.writeImages(SyntheticCorpus.imagesOf(gen), imagesPath, numParts = 4)
+    gen.unpersist()
+
+    def scores(r: Pipeline.Result): Map[Long, Long] = r.scores.as[(Long, Long)].collect().toMap
+    def untimed(r: Pipeline.Result): Seq[Pipeline.PhaseStat] = r.stats.map(_.copy(seconds = 0.0))
+    def release(r: Pipeline.Result): Unit = { r.features.unpersist(); r.captions.unpersist() }
+    for ((cfg, i) <- Seq(GraftConfig(seed = 7L), GraftConfig(seed = 7L, maxMacroRounds = 2)).zipWithIndex) {
+      val workDir = s"$base/work$i"
+      val plain = Pipeline.run(spark, spark.read.parquet(imagesPath), cfg)
+      val (ckpt, _) = CheckpointedPipeline.run(spark, imagesPath, workDir, cfg)
+      val golden = partitionSets(plain.assign)
+      assert(partitionSets(ckpt.assign) == golden, s"partition differs, $cfg")
+      assert(scores(ckpt) == scores(plain), s"scores differ, $cfg")
+      assert(untimed(ckpt) == untimed(plain), s"stats differ, $cfg")
+      assert(ckpt.stats.forall(_.seconds > 0), s"unfilled seconds: ${ckpt.stats}")
+
+      if (cfg.maxMacroRounds > 0) {
+        TableIO.completedKeys(workDir).filter(_.startsWith("round_"))
+          .map(_.stripPrefix("round_").toInt).filter(_ >= 1)
+          .foreach(r => TableIO.dropEntry(workDir, s"round_$r"))
+        val (resumed, rep) = CheckpointedPipeline.run(spark, imagesPath, workDir, cfg)
+        assert(rep.roundsSkipped == Seq(0), s"skipped ${rep.roundsSkipped}")
+        assert(partitionSets(resumed.assign) == golden)
+        assert(scores(resumed) == scores(plain))
+        assert(untimed(resumed) == untimed(plain).tail, s"resumed stats ${resumed.stats}")
+        release(resumed)
+      }
+      release(plain); release(ckpt)
+    }
   }
 
   test("ledger entries carry per-partition lineage metrics and survive rewrite") {

@@ -71,6 +71,23 @@ class RoundControlSpec extends SparkSpec {
       prevSingles = 75009L, stat = Pipeline.PhaseStat("final", 10, -1L, 0L,
         1000L, 75009L - 10 * ctl.workInBadMacro - 1, 0.0))
     assert(bad2 == 0 && !stop2)
+
+    // the stop predicate stepPass and a resumed start share: round 0 with
+    // singles left never stops; adaptive mode stops once bad >= allowedBad
+    // at/after minMacro; explicit mode stops below minWorkRate (0.005)
+    val r0 = Pipeline.PhaseStat("chunk+band", 0, -1L, 0L, 1000L, 500L, 1.0)
+    assert(!ctl.stop(0, r0) && !fixed.stop(0, r0))
+    assert(ctl.stop(0, r0.copy(singles = 0L)))
+    val late = Pipeline.PhaseStat("final", ctl.minMacro, -1L, 0L, 1000L, 500L, 0.0)
+    assert(ctl.stop(ctl.allowedBadMacro, late))
+    assert(!ctl.stop(ctl.allowedBadMacro - 1, late))
+    assert(!ctl.stop(ctl.allowedBadMacro, late.copy(macroRound = ctl.minMacro - 1)))
+    assert(fixed.stop(0, late.copy(workRate = 0.004)))
+    assert(!fixed.stop(0, late.copy(workRate = 0.005)))
+    assert(fixed.stepPass(bad = 0, rounds = Seq(3), prevSingles = 500L,
+      stat = late.copy(macroRound = 3, singles = 498L, workRate = 0.004)) == ((0, true)))
+    assert(fixed.stepPass(bad = 0, rounds = Seq(3), prevSingles = 500L,
+      stat = late.copy(macroRound = 3, singles = 490L, workRate = 0.02)) == ((0, false)))
   }
 
   test("score-delta broadcast gate bounds the hinted relation, not the pair count") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.cluster.{ConnectedComponents, Pipeline}
@@ -84,6 +85,14 @@ class ConnectedComponentsSpec extends SparkSpec {
           ConnectedComponents.components(spark, chain.toDF("a", "b")))
         .as[(Long, Long)].collect().toMap
       assert(got == UnionFindOracle.components(nodes, chain))
+      // an override past the probe's Int row limit clamps to it instead of
+      // silently disabling the fast path: the answer is a local relation
+      spark.conf.set("spark.graft.cc.driverUnionFindMaxEdges", "9999999999")
+      val comps = ConnectedComponents.components(spark, chain.toDF("a", "b"))
+      assert(comps.queryExecution.analyzed.collectFirst { case l: LocalRelation => l }.isDefined,
+        "a clamped cap override must take the driver fast path")
+      assert(ConnectedComponents.assign(nodes.toDF("row_id"), comps)
+        .as[(Long, Long)].collect().toMap == UnionFindOracle.components(nodes, chain))
     } finally spark.conf.unset("spark.graft.cc.driverUnionFindMaxEdges")
   }
 
@@ -146,6 +155,20 @@ class ConnectedComponentsSpec extends SparkSpec {
     val big = Pipeline.heapPressureWarning(spark, Long.MaxValue / 400)
     assert(big.isDefined && big.get.contains("HEAP PRESSURE"))
     assert(Pipeline.heapPressureWarning(spark, 1000L).isEmpty)
+    // a malformed spark.memory.fraction reads as Spark's 0.6 default
+    // instead of failing the run (a core conf: the session accepts a
+    // runtime value for it only with the legacy SET guard off)
+    val guard = "spark.sql.legacy.setCommandRejectsSparkCoreConfs"
+    try {
+      spark.conf.set(guard, "false")
+      spark.conf.set("spark.memory.fraction", "not-a-fraction")
+      val bad = Pipeline.heapPressureWarning(spark, Long.MaxValue / 400)
+      assert(bad.exists(_.contains("spark.memory.fraction=0.6")), s"got $bad")
+      assert(Pipeline.heapPressureWarning(spark, 1000L).isEmpty)
+    } finally {
+      spark.conf.unset("spark.memory.fraction")
+      spark.conf.unset(guard)
+    }
   }
 
   test("CC driver fast path retires candidate shuffles once, after the probe") {
