@@ -1,6 +1,7 @@
 package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -143,7 +144,13 @@ object ConnectedComponents {
     * verified-pair rows plus a ~GBs localCheckpoint materialization at
     * the exact moment the run's scratch disk peaks (the round-0 crest,
     * BENCH.md round 8). When set, `edges` is used as iteration state
-    * directly and is NEVER unpersisted here (the caller owns it). The
+    * directly and is NEVER unpersisted here (the caller owns it) — unless
+    * it reaches the star loop as a lazy plan (analyzed plan not a single
+    * checkpoint leaf, e.g. DocDedup's verify joins): the loop reads its
+    * input three times (the first signature, then both sides of the first
+    * large-star), so such an input is localCheckpoint'ed once, materialized
+    * by the first signature job and freed after the first star-pair
+    * (ADVICE r8). The
     * flag is a pure optimization even on contract breach: the star steps
     * filter self-loops and re-distinct internally, so a non-normalized
     * input converges to the same labels, just without the saved shuffle
@@ -188,6 +195,10 @@ object ConnectedComponents {
       // signature job would otherwise pay)
     }
 
+    if (!curOwned && !cur.queryExecution.analyzed.isInstanceOf[LogicalRDD]) {
+      cur = cur.localCheckpoint(false)
+      curOwned = true
+    }
     var converged = false
     var iter = 0
     var curSig = signature(cur)

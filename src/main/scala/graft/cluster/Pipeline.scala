@@ -388,8 +388,8 @@ object Pipeline {
   }
 
   /** Phase 4, one PASS = the fused consecutive macro rounds `rounds`:
-    * focus set -> per-round banding branches fused into one explode ->
-    * verify -> incremental CC. Returns the new state and the pass's stat
+    * focus set -> every fused round's bands in one explode -> verify ->
+    * incremental CC. Returns the new state and the pass's stat
     * (attributed to `rounds.last`). */
   def macroStep(spark: SparkSession, features: DataFrame, captions: DataFrame, st: State,
                 cfg: GraftConfig, rounds: Seq[Int],
@@ -399,7 +399,8 @@ object Pipeline {
     // reference's cycling r (`:623-628`): round j samples rank (j-1) %
     // reps_per_cluster. ONE wide exchange: state joins the checkpointed
     // sizes on cluster_id and the rank window reuses that partitioning.
-    val maxRank = rounds.map(j => (j - 1) % cfg.repsPerCluster).max
+    val rankOf = (j: Int) => (j - 1) % cfg.repsPerCluster + 1
+    val maxRank = rounds.map(rankOf).max
     // sizes has exactly `prevClusters` rows — hint the broadcast ourselves
     // (static stats of a checkpointed relation are unknown, so without the
     // hint a non-AQE plan would sort-merge and shuffle ALL of rel here)
@@ -413,19 +414,22 @@ object Pipeline {
       .orderBy(col("score").desc, col("row_id"))
     val reps = relSz.where(col("sz") > 1)
       .withColumn("rk", row_number().over(wRank))
-      .where(col("rk") <= maxRank + 1)
+      .where(col("rk") <= maxRank)
       .select(col("row_id"), col("rk"))
     val focus = singlesDf.unionAll(reps)
 
-    // persisted: the per-round branches below scan it rounds.size times and
-    // chainPairs scans its input twice (intra window + shard-min aggregate)
+    // persisted: chainPairs scans the explode below twice (intra window +
+    // shard-min aggregate), which would otherwise run this join twice
     val focusFeatures = features.join(focus, "row_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // Fused candidate generation: round j's branch = (singles ∪ rank-of-j
-    // reps) exploded over round j's L seeded lane subsets, band ids offset
-    // per round so buckets never mix across rounds. The union feeds ONE
-    // salted chaining pass — the same candidate draws a sequential run of
+    // Fused candidate generation: round j bands (singles ∪ rank-of-j reps)
+    // over its L seeded lane subsets. ONE explode over the focus relation
+    // emits every fused round's bands (each row gets the rounds that sample
+    // it), so each chainPairs scan is one pass over the focus partitions
+    // whatever the pass width. Per-(macro round, band) seeds inside the
+    // hash keep buckets disjoint across the fused rounds, and the explode
+    // feeds ONE salted chaining pass — the same candidate draws a sequential run of
     // these rounds would make (modulo focus refresh between rounds, which
     // fusion trades for a T× cut in stage-barrier latency). Rep draws CAN
     // diverge from the sequential schedule: ranks use pass-start scores and
@@ -435,13 +439,7 @@ object Pipeline {
     // rows — "recall-safe" is an approximation that has held at every
     // measured scale, not an invariant (ADVICE r3; watch recall if
     // fusedBandRowCap ever allows very wide passes on skewed corpora).
-    val buckets = rounds.map { j =>
-      val rkJ = (j - 1) % cfg.repsPerCluster + 1
-      val f = focusFeatures.where(col("rk") === 0 || col("rk") === rkJ)
-      // per-(macro round, band) seeds inside the hash keep buckets disjoint
-      // across the fused rounds — no band-id offset column needed (round 4)
-      Banding.explodeBands(f, cfg, j)
-    }.reduce(_ unionAll _)
+    val buckets = Banding.explodeFusedBands(focusFeatures, cfg, rounds, rankOf)
     val cand = Banding.chainPairs(buckets, cfg.saltShards)
     // EAGER localCheckpoint, not persist (ADVICE r4): `verified` stays live
     // across this pass's early retire() below, and a persisted-only cache

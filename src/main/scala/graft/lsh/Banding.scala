@@ -20,6 +20,11 @@ import graft.util.Hashing
   * generation doesn't depend on intermediate merges are FUSED into one job
   * (SURVEY.md §7.3 — the main scale lever): L band hashes are computed as
   * column expressions (whole-stage codegen), exploded, and shuffled once.
+  * A fused macro pass of T rounds explodes all T×L bands in ONE scan of
+  * its focus relation ([[explodeFusedBands]]): each row picks the literal
+  * (seed, lanes) list of the rounds that sample it and hashes per exploded
+  * row, so the plan has no per-round branches and keeps the focus
+  * relation's partition count.
   * Within a bucket, chaining is a window `lag` — with SALTING for
   * skew-heavy mega-buckets (north rule): each bucket is split into
   * `saltShards` shards keyed by a per-(row, bucket) hash; rows chain within
@@ -51,6 +56,13 @@ object Banding {
   def lanes(cfg: GraftConfig, macroRound: Int): Array[Array[Int]] =
     laneSeeds(cfg, macroRound).map(Hashing.sampleIndices(_, cfg.m, cfg.k))
 
+  /** One band of a macro iteration: its seed and its k lane indices. */
+  private final case class Band(seed: Long, lanes: Seq[Int])
+
+  private def bands(cfg: GraftConfig, macroRound: Int): Seq[Band] =
+    laneSeeds(cfg, macroRound).zip(lanes(cfg, macroRound)).toSeq
+      .map { case (seed, ls) => Band(seed, ls.toSeq) }
+
   /** One globally-keyed band-hash column per round, for a `minhash` array
     * column: hash r = xxhash64(seed_r, minhash[lanes_r]). Exposed as
     * individual columns so callers can BATCH the explode over subsets of
@@ -58,20 +70,32 @@ object Banding {
     * buckets live entirely within one round's hash, so batching never
     * splits a bucket and the emitted chain-pair set is identical). */
   def bandHashCols(minhashCol: Column, cfg: GraftConfig, macroRound: Int): Seq[Column] =
-    laneSeeds(cfg, macroRound).zip(lanes(cfg, macroRound)).toSeq.map { case (seed, ls) =>
-      xxhash64((lit(seed) +: ls.map(i => minhashCol.getItem(i))): _*)
+    bands(cfg, macroRound).map { b =>
+      xxhash64((lit(b.seed) +: b.lanes.map(i => minhashCol.getItem(i))): _*)
     }
 
-  /** Column of L globally-keyed band hashes for a `minhash` array column. */
-  def bandHashArray(minhashCol: Column, cfg: GraftConfig, macroRound: Int): Column =
-    array(bandHashCols(minhashCol, cfg, macroRound): _*)
-
-  /** Exploded (row_id, band_hash) relation for the fused L rounds of one
-    * macro iteration. `df` must have `row_id` and `minhash` columns. */
-  def explodeBands(df: DataFrame, cfg: GraftConfig, macroRound: Int): DataFrame =
-    df.select(
-      col("row_id"),
-      explode(bandHashArray(col("minhash"), cfg, macroRound)).as("band_hash"))
+  /** Exploded (row_id, band_hash) relation for the fused macro rounds
+    * `rounds` over a focus relation with `row_id`, `minhash` and an int
+    * rank `rk`: rows of rank 0 are banded in every round, rows of rank r
+    * in the rounds j with `rankOf(j) == r`, any other rank in none. A CASE
+    * on `rk` picks the row's literal list of (seed, lanes) bands and ONE
+    * explode emits it, so the plan scans `focus` once and keeps its
+    * partitioning. The projection after the explode is O(k), not one hash
+    * expression per band (T×L of them in one generated method):
+    * band_hash = xxhash64(seed, minhash[lanes(0)], …, minhash[lanes(k-1)])
+    * — the same value [[bandHashCols]] computes for that round and band. */
+  def explodeFusedBands(focus: DataFrame, cfg: GraftConfig, rounds: Seq[Int],
+      rankOf: Int => Int): DataFrame = {
+    def bandsOf(js: Seq[Int]): Column = typedLit(js.flatMap(bands(cfg, _)))
+    val pick = rounds.groupBy(rankOf).toSeq.sortBy(_._1)
+      .foldLeft(when(col("rk") === 0, bandsOf(rounds))) { case (c, (r, js)) =>
+        c.when(col("rk") === r, bandsOf(js))
+      }
+    val band = col("band")
+    focus.select(col("row_id"), col("minhash"), explode(pick).as("band"))
+      .select(col("row_id"), xxhash64((band("seed") +: (0 until cfg.k).map(i =>
+        col("minhash").getItem(band("lanes").getItem(i)))): _*).as("band_hash"))
+  }
 
   /** V4 — salted within-bucket chaining. Input must have columns
     * (row_id, band_hash); output is normalized pairs (a < b), distinct.
@@ -125,5 +149,7 @@ object Banding {
   /** Full fused banding pass: features (row_id, minhash) → candidate pairs
     * (a, b), a < b, distinct across all L rounds. */
   def candidatePairs(features: DataFrame, cfg: GraftConfig, macroRound: Int): DataFrame =
-    chainPairs(explodeBands(features, cfg, macroRound), cfg.saltShards)
+    chainPairs(features.select(col("row_id"),
+      explode(array(bandHashCols(col("minhash"), cfg, macroRound): _*)).as("band_hash")),
+      cfg.saltShards)
 }

@@ -44,7 +44,7 @@ object PipeLab {
         val res = Pipeline.run(spark, images, GraftConfig(seed = 7L))
         res.assign.count()
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
         val phases = res.stats.map(s =>
           f"${s.phase}@${s.macroRound}=${s.seconds}%.2f").mkString(" ")
         println(f"[pipelab] mode=$mode iter=$i wall=$sec%.2f jobs=$jobs  $phases")

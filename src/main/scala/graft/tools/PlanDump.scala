@@ -52,7 +52,7 @@ object PlanDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val rows = df.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let queued listener events drain before reading counts
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val pw = new PrintWriter(new File(dir, s"$name.txt"))

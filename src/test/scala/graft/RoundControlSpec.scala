@@ -160,16 +160,25 @@ class RoundControlSpec extends SparkSpec {
     val images = EvyatIO.asImages(reads)
     val truth = EvyatIO.truthOf(reads)
 
-    def recallAt(maxMacro: Int): Double = {
+    def runAt(maxMacro: Int): (Double, Pipeline.Result) = {
       val cfg = GraftConfig(seed = 7L, usePhash = false, anchorAlphabet = "ACGT",
         maxMacroRounds = maxMacro)
-      Metrics.evaluate(spark, Pipeline.run(spark, images, cfg).assign, truth).dupPairRecall
+      val res = Pipeline.run(spark, images, cfg)
+      (Metrics.evaluate(spark, res.assign, truth).dupPairRecall, res)
     }
     // round-1 default behavior: fixed 8-round budget with the work-rate
     // stop, which quits at the first macro round resolving < 0.5% of
     // singles — on a hard corpus that fires long before the budget is spent
-    val fixed8 = recallAt(8)
-    val adaptive = recallAt(0) // n-scaled budget + bad-round patience
+    val (fixed8, _) = runAt(8)
+    val (adaptive, res) = runAt(0) // n-scaled budget + bad-round patience
+    // Golden pin: the adaptive run's one fused pass (rounds 1–10) MERGES —
+    // unlike the planted benchmark corpus, whose pass verifies nothing — so
+    // a change to fused candidate generation shows here as a different
+    // pass stat or score total. Recorded before the single-explode pass.
+    assert(res.stats.map(_.copy(seconds = 0.0)) == Seq(
+      Pipeline.PhaseStat("chunk+band", 0, -1L, 268L, 332L, 64L, 1.0),
+      Pipeline.PhaseStat("final", 10, -1L, 30L, 302L, 4L, 0.9375)))
+    assert(res.scores.agg(org.apache.spark.sql.functions.sum("score")).head().getLong(0) == 596L)
     info(s"fixed8 recall = $fixed8, adaptive recall = $adaptive")
     println(s"[c6] fixed8 recall = $fixed8, adaptive recall = $adaptive")
     assert(adaptive >= 0.99, s"adaptive recall $adaptive")
