@@ -40,59 +40,12 @@ object SparkEntry {
   private def docChainPairs(s: SparkSession, dir: String): DataFrame =
     Banding.chainPairs(docBuckets(s, dir), saltShards = 1)
 
-  /** The operator demos below run EAGER iterative work (CC star rounds,
-    * metric aggregations) over fixture-scale tables where per-stage
-    * adaptive replanning dominates wall time — the same latency profile as
-    * the pipeline's small macro passes, so they reuse the same conf flip
-    * (AQE off + few static shuffle partitions) when the fixture is small.
-    * Results are identical either way; only planning latency changes. */
-  private val smallDocsCache = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  /** Cache key carries the parquet path's RECURSIVE file listing (count +
-    * sizes + mtimes; a plain single-file path contributes its own
-    * length/mtime, nested partition dirs are walked), so a fixture path
-    * REWRITTEN in-session is re-counted instead of riding a stale
-    * small/large classification (ADVICE r4, recursive walk + plain-file
-    * case per ADVICE r5). */
-  private def docsDirSig(dir: String): String = {
-    def walk(f: java.io.File): (Long, Long) =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-          .map(walk).foldLeft((0L, 0L)) {
-            case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2)
-          }
-      else if (f.isFile) (1L, f.length() + 31L * f.lastModified())
-      else (0L, 0L)
-    val (count, sig) = walk(new java.io.File(dir, "documents.parquet"))
-    s"$dir#$count#$sig"
-  }
-  private def smallDocs(s: SparkSession, dir: String): Boolean = {
-    val sig = docsDirSig(dir)
-    smallDocsCache.get(sig) match {
-      case Some(v) => v
-      case None =>
-        // rewrites change the signature: evict superseded keys for the same
-        // dir so the map doesn't grow forever in-session (ADVICE r5)
-        smallDocsCache.keySet.filter(k => k.startsWith(s"$dir#") && k != sig)
-          .foreach(smallDocsCache.remove)
-        val v = docs(s, dir).count() < 100000L
-        smallDocsCache.putIfAbsent(sig, v)
-        v
-    }
-  }
-  /** `-Dgraft.smalljob.disable=true` pins the flip OFF — a diagnostic
-    * escape used by [[graft.tools.QueryLab]] to separate the conf flip's
-    * effect from box variance on the fixture queries. */
-  private def smallJob[A](s: SparkSession, dir: String)(f: => A): A =
-    Pipeline.withSmallPassConf(s, smallDocs(s, dir) &&
-      !sys.props.get("graft.smalljob.disable").contains("true"))(f)
-
   /** Real connected-components assignment over the chain edges. */
-  private def docClusters(s: SparkSession, dir: String): DataFrame =
-    smallJob(s, dir) {
-      val ids = docs(s, dir).select(col("doc_id").as("row_id"))
-      ConnectedComponents.assign(ids,
-        ConnectedComponents.components(s, docChainPairs(s, dir)))
-    }
+  private def docClusters(s: SparkSession, dir: String): DataFrame = {
+    val ids = docs(s, dir).select(col("doc_id").as("row_id"))
+    ConnectedComponents.assign(ids,
+      ConnectedComponents.components(s, docChainPairs(s, dir)))
+  }
 
   /** pred/truth pair for the metric operators (M1–M6): pred = chain-CC
     * clusters, truth = source column (impure w.r.t. pred ⇒ nondegenerate). */
@@ -103,11 +56,10 @@ object SparkEntry {
     (pred, truth)
   }
 
-  private def metricsReport(s: SparkSession, dir: String): Metrics.Report =
-    smallJob(s, dir) {
-      val (pred, truth) = predTruth(s, dir)
-      Metrics.evaluate(s, pred, truth)
-    }
+  private def metricsReport(s: SparkSession, dir: String): Metrics.Report = {
+    val (pred, truth) = predTruth(s, dir)
+    Metrics.evaluate(s, pred, truth)
+  }
 
   private def r6(d: Double): Double =
     BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -315,15 +267,11 @@ object SparkEntry {
     // ---- hash-internal dedup (deterministic given seeds: sf0.01 histograms
     // pinned as VALUES oracles; planted-truth semantics in DocDedupSpec) ----
     "dedup_minhash_lsh" -> ((s, dir) =>
-      smallJob(s, dir) {
-        DocDedup.minhashLsh(s, docs(s, dir), GraftConfig(q = 5, bandRounds = 16), 0.92)
-      }
+      DocDedup.minhashLsh(s, docs(s, dir), GraftConfig(q = 5, bandRounds = 16), 0.92)
         .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
         .groupBy("sz").agg(count(lit(1)).as("n_clusters"))),
     "dedup_simhash" -> ((s, dir) =>
-      smallJob(s, dir) {
-        DocDedup.simhash(s, docs(s, dir), hammingMax = 3)
-      }
+      DocDedup.simhash(s, docs(s, dir), hammingMax = 3)
         .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
         .groupBy("sz").agg(count(lit(1)).as("n_clusters"))),
 

@@ -213,37 +213,6 @@ object Pipeline {
   private[graft] def deltasBroadcastable(nVerified: Long): Boolean =
     2L * nVerified <= RepBroadcastMaxRows
 
-  /** Late macro passes touch a few-thousand-row focus set across ~15
-    * barrier-separated stages; at that size the wall is per-stage ADAPTIVE
-    * REPLANNING + task-launch latency, not work (the ~91 s core-count-
-    * invariant residual pass, VERDICT r3 #2). Passes whose focus estimate
-    * is at most [[SmallPassFocusRows]] therefore run with AQE off and a
-    * small static shuffle-partition count; both are runtime confs restored
-    * afterwards, so large passes keep AQE's skew/coalesce machinery.
-    *
-    * CONCURRENCY (ADVICE r4): the flip mutates SESSION-GLOBAL runtime conf
-    * and assumes the single-threaded driver loop this pipeline (and the
-    * demo entry points) run under — a concurrent query on the same
-    * SparkSession during a small pass would silently observe AQE off / 16
-    * shuffle partitions, and nested or parallel use races the
-    * save-and-restore. Callers that share a session across threads should
-    * run small passes on `spark.newSession()` instead. */
-  private val SmallPassFocusRows = 100000L
-
-  private[graft] def withSmallPassConf[A](spark: SparkSession, small: Boolean)(f: => A): A =
-    if (!small) f
-    else {
-      val conf = spark.conf
-      val aqe = conf.get("spark.sql.adaptive.enabled", "true")
-      val parts = conf.get("spark.sql.shuffle.partitions", "200")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", "16")
-      try f finally {
-        conf.set("spark.sql.adaptive.enabled", aqe)
-        conf.set("spark.sql.shuffle.partitions", parts)
-      }
-    }
-
   /** Measured hot-cache footprint (features cache after the round-5 diet:
     * row_id + phash + 40 32-bit minhash lanes + row overhead), CacheAudit /
     * BENCH.md: ~186–196 B/row across 2M–64M corpora. Used only by the
@@ -629,16 +598,6 @@ object Pipeline {
     }
 
     val stats = scala.collection.mutable.ArrayBuffer.empty[PhaseStat]
-    // Round-8 NEGATIVE result, kept on record (guide §1.2 — measure, don't
-    // assume): wrapping round 0 in the small-pass conf at fixture scale
-    // (AQE off + 16 static shuffle partitions) made round 0 itself faster
-    // (5.0 vs 6.4 s at the 15k-row bench corpus, PipeLab A/B) but the
-    // downstream macro pass SLOWER (9.6 vs 7.0 s) and the run +21 jobs:
-    // the state checkpoints materialize 16-partitioned instead of
-    // AQE-coalesced to ~1, and every later pass pays the wider task fan
-    // on a few-thousand-row relation. Round 0 therefore stays on the
-    // session conf; only the late macro passes flip (below), as measured
-    // in round 3.
     var Start(st, last, bad) = resume().getOrElse {
       val t0 = System.nanoTime()
       val (s0, stat0) = initialState(spark, features, captions, cfg, n, capLen, retire)
@@ -659,10 +618,8 @@ object Pipeline {
       val t = ctl.passSize(macroItr, bad, last.clusters)
       val rounds = macroItr until (macroItr + t)
       val t0 = System.nanoTime()
-      val (st2, stat0) = withSmallPassConf(spark, last.clusters <= SmallPassFocusRows) {
-        macroStep(spark, features, captions, st, cfg, rounds, last.clusters,
-          last.singles, retire)
-      }
+      val (st2, stat0) = macroStep(spark, features, captions, st, cfg, rounds,
+        last.clusters, last.singles, retire)
       val stat = stat0.copy(seconds = (System.nanoTime() - t0) / 1e9)
       stats += stat
       val (nbad, stop) = ctl.stepPass(bad, rounds, last.singles, stat)

@@ -8,10 +8,7 @@ import graft.model.GraftConfig
 
 /** Diagnostic: run the flagship pipeline on the Bench synthetic corpus N
   * times in one JVM, printing per-rep wall + per-phase seconds + job
-  * counts — used to isolate driver-loop overhead changes from box variance
-  * (round 8: this A/B killed the round-0 small-pass flip — r0 under
-  * AQE-off/16-partitions was 1.4 s faster itself but its 16-partition
-  * state checkpoints made the downstream macro pass 2.6 s slower).
+  * counts — used to isolate driver-loop overhead changes from box variance.
   * `mode` is a free-form label echoed in the output lines. Usage:
   *   sbt "runMain graft.tools.PipeLab <groups> <reps> [label]"
   */

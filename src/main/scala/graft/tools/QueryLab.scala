@@ -5,18 +5,15 @@ import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Diagnostic: run one SparkEntry query N times in a single JVM and print
-  * per-iteration wall times, optionally pinning the small-job conf flip on
-  * or off (the round-4 BENCH artifact regressed `cc_min_label` +36% and
-  * `dedup_simhash` +24% in the round that introduced the flip — this tool
-  * separates conf effect from box variance). Usage:
-  *   sbt "runMain graft.tools.QueryLab cc_min_label 5 [small|large|auto] [sfDir]"
+  * per-iteration wall times, so a query's cost can be separated from box
+  * variance. Usage:
+  *   sbt "runMain graft.tools.QueryLab cc_min_label 5 [sfDir]"
   */
 object QueryLab {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("cc_min_label")
     val reps = if (args.length > 1) args(1).toInt else 5
-    val mode = if (args.length > 2) args(2) else "auto"
-    val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
+    val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -25,37 +22,18 @@ object QueryLab {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // pin the conf the query's own smallJob wrapper would flip: "small"
-    // forces AQE off + 16 partitions for the WHOLE run, "large" leaves the
-    // session conf alone AND disarms the wrapper by pre-setting the flip
-    // confs to the session values (the wrapper save/restores, so pinning
-    // here only matters for what the wrapped body sees)
-    mode match {
-      case "small" =>
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-      case "large" =>
-        // actually disarm SparkEntry's small-job wrapper (ADVICE r5: this
-        // arm was a no-op, so mode=large on a small fixture silently
-        // measured flip-ON behavior); cleared in the finally below
-        sys.props("graft.smalljob.disable") = "true"
-      case _ => ()
-    }
     try {
       val fn = SparkEntry.queries(name)
       val times = (1 to reps).map { i =>
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val s = (System.nanoTime() - t0) / 1e9
-        println(f"[querylab] $name iter=$i rows=$n sec=$s%.3f mode=$mode")
+        println(f"[querylab] $name iter=$i rows=$n sec=$s%.3f")
         s
       }
       val sorted = times.sorted
-      println(f"[querylab] $name mode=$mode min=${sorted.head}%.3f " +
+      println(f"[querylab] $name min=${sorted.head}%.3f " +
         f"median=${sorted(reps / 2)}%.3f max=${sorted.last}%.3f")
-    } finally {
-      if (mode == "large") sys.props -= "graft.smalljob.disable"
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

@@ -347,14 +347,38 @@ class PipelineSpec extends SparkSpec {
     // fixed small budget: this test asserts partition-order invariance, not
     // round control — two runs at the adaptive budget would double its cost
     val cfg = GraftConfig(seed = 7L, maxMacroRounds = 4)
-    def partitionOf(img: org.apache.spark.sql.DataFrame): Set[Set[Long]] = {
+    def runOf(img: org.apache.spark.sql.DataFrame)
+        : (Set[Set[Long]], Map[Long, Long], Seq[Pipeline.PhaseStat]) = {
       import spark.implicits._
-      Pipeline.run(spark, img, cfg).assign.as[(Long, Long)].collect()
+      val res = Pipeline.run(spark, img, cfg)
+      val part = res.assign.as[(Long, Long)].collect()
         .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
+      val out = (part, res.scores.as[(Long, Long)].collect().toMap,
+        res.stats.map(_.copy(seconds = 0.0)))
+      res.features.unpersist(); res.captions.unpersist()
+      out
     }
-    val p1 = partitionOf(images)
-    val p2 = partitionOf(images.repartition(17, col("caption")))
+    val (p1, s1, st1) = runOf(images)
+    val (p2, _, _) = runOf(images.repartition(17, col("caption")))
     assert(p1 == p2, "clustering changed under repartitioning")
+    // the session's shuffle layout is not a semantics knob either: AQE off
+    // with 16 static shuffle partitions (vs the session's AQE on / 8) must
+    // give the same partition, scores and per-pass stats
+    val conf = spark.conf
+    val (aqe, parts) = (conf.get("spark.sql.adaptive.enabled"),
+      conf.get("spark.sql.shuffle.partitions"))
+    val (p3, s3, st3) =
+      try {
+        conf.set("spark.sql.adaptive.enabled", "false")
+        conf.set("spark.sql.shuffle.partitions", "16")
+        runOf(images)
+      } finally {
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        conf.set("spark.sql.shuffle.partitions", parts)
+      }
+    assert(p1 == p3, "clustering changed under AQE off / 16 partitions")
+    assert(s1 == s3, "A6 scores changed under AQE off / 16 partitions")
+    assert(st1 == st3, "phase stats changed under AQE off / 16 partitions")
     gen.unpersist()
   }
 
